@@ -34,6 +34,8 @@ value path.
 
 from __future__ import annotations
 
+from typing import Callable, NamedTuple
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -777,8 +779,8 @@ def _minhash_sig(docs: DataFrame) -> DataFrame:
 
     Shape (r14, VERDICT r13 item 2): an Arrow-batched vectorized
     numpy kernel — the (n_tokens × 256) mult-add-mod lattice is BLAS-
-    shaped integer math, and the measured A/B at sf0.1
-    (tools/r14_mh_ab.py) reads 0.88 s vs 3.87 s for the explode +
+    shaped integer math, and the measured A/B at sf0.1 reads
+    0.88 s vs 3.87 s for the explode +
     256-column MIN hash-aggregate it replaces (4.4×; HOF fold/array
     variants were 1.5–2× SLOWER than the aggregate — interpreted
     lambdas). Exactness: everything is int64 with every intermediate
@@ -916,7 +918,7 @@ def ext_dedup_near(spark: SparkSession, sf: str) -> DataFrame:
     2. per-doc MinHash signature = the _minhash_sig vectorized numpy
        kernel — a per-row Arrow-batched map, 4.4× the old explode +
        256-column MIN aggregate and one doc_id shuffle cheaper (A/B
-       in tools/r14_mh_ab.py, value-identical);
+       at sf0.1: 0.88 s vs 3.87 s, value-identical);
     3. band keys: md5-long over each band's ':'-joined 4 signature
        rows → 64 longs (8-byte join keys — the 32-char md5 STRING key
        variant measured 26 s vs 5.9 s warm at sf0.1, the string
@@ -2626,6 +2628,574 @@ def llm_data_pipeline_v2(spark: SparkSession, sf: str) -> DataFrame:
     return _chunk_summary(survivors)
 
 
+# --- the curation funnel: llm_data_pipeline_v4..v9 from one stage list ---
+#
+# Every version is an ordered tuple of named stages plus a tuple of
+# tails (_VERSIONS). A stage maps the previous layer — (doc_id, source,
+# text), widened by entropy with (n_tokens, entropy) and by dsir_select
+# with log_weight — to the next, and carries four things: the Spark
+# transform, the cut, the DuckDB CTE fragment and the funnel-count
+# column. One function (_funnel) builds the DataFrame and one
+# (_funnel_sql) composes the oracle, so the two cannot drift apart.
+#
+# Cuts. A layer that a later stage reads is read twice (by that stage
+# and by the count block), so it is cut: persist_tracked for the early
+# layers, localCheckpoint from semantic dedup down (the dedup_clusters
+# rule: cut lineage where lineage itself is the pathology). With
+# persists all the way down, every layer's InMemoryRelation PRINTS its
+# full cached subtree, each layer is referenced twice above its
+# relation, and AQE regenerates the explain string on every adaptive
+# update — measured 2.9 MB of plan text and ~100 s of planner CPU in
+# generateTreeString at sf0.001 (the string-budget cap doesn't help:
+# the TRAVERSAL is what's combinatorial); the localCheckpoint tail took
+# that to ~0.3 s per action. The url stage is cut the same way at the
+# head: a persisted base ABOVE the whole funnel puts its InMemoryRelation
+# — whose subtree holds the canon-URL window and the bigram-LM
+# aggregates — into every layer's printed plan (v8 measured 23.0 s
+# persisted vs 10.2 s checkpointed at sf0.1, warm, back to back).
+# The last stage's output is `kept`; no stage reads it, so the tails
+# decide its cut (the temperature mix checkpoints it, see v6's
+# docstring for the lineage-non-recoverable trade).
+#
+# Counts. n_raw plus one n_after_<stage> per layer before `kept`, all
+# from ONE union of (source, layer-tag) rows and ONE map-side-combinable
+# conditional aggregate: one exchange and no joins for the whole block.
+# F.count(F.when(tag = i, 1)) over the union ≡ COUNT(*) per layer, and
+# a source absent from a layer counts 0 — every layer is a subset of
+# documents, so the union's source set is the raw corpus's. The oracle
+# composes the same block with COUNT(*) FILTER.
+
+
+def _st_url(spark: SparkSession, sf: str, df: DataFrame) -> DataFrame:
+    # canonical-address keep-best dedup BEFORE any text statistic: the
+    # domain dup-ratio flagging then reads the post-URL corpus (a
+    # mirror crawled twice must not count toward its source's ratio)
+    dups = _url_ranked(spark, sf).where(F.col("_rn") > 1).select("doc_id")
+    return df.join(dups, "doc_id", "left_anti")
+
+
+def _st_domain(spark: SparkSession, sf: str, df: DataFrame) -> DataFrame:
+    fp = F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(TOKENS()))))
+    dup_rate = F.round(
+        1.0 - F.countDistinct("f").cast("double") / F.count(F.lit(1)) + 1e-9, 4
+    )
+    flagged = (
+        df.select("source", fp.alias("f"))
+        .groupBy("source")
+        .agg(dup_rate.alias("dr"))
+        .where(F.col("dr") > 0.055)
+        .select("source")
+    )
+    return df.join(F.broadcast(flagged), "source", "left_anti")
+
+
+def _st_exact(spark: SparkSession, sf: str, df: DataFrame) -> DataFrame:
+    keep1 = df.groupBy(F.md5("text")).agg(F.min("doc_id").alias("doc_id"))
+    return df.join(keep1.select("doc_id"), "doc_id", "left_semi")
+
+
+def _st_boilerplate(spark: SparkSession, sf: str, df: DataFrame) -> DataFrame:
+    bad = dedup_paragraph(spark, sf).where(F.col("keep_doc") == 0)
+    return df.join(bad.select("doc_id"), "doc_id", "left_anti")
+
+
+def _st_entropy(spark: SparkSession, sf: str, df: DataFrame) -> DataFrame:
+    # Per-doc token entropy as a PER-ROW array expression: token
+    # counts, n_tokens and the entropy formula are row-local quantities
+    # of the token array, so they fuse into the projection with no
+    # corpus-token shuffle. Per-row cost: ONE array_sort (O(L log L))
+    # and a run-length fold over the sorted array (O(L)) accumulating
+    # Σ c·log2 c directly. Values: identical (token, count) multiset →
+    # identical terms; only float accumulation order differs from the
+    # oracle's hash-agg order, which the 6dp rounding absorbs.
+    def close(acc):
+        # closing a run adds its c·log2 c term (log2(1) = 0: no-op)
+        return acc["clog"] + F.when(
+            acc["run"] > 0.0, acc["run"] * F.log2(acc["run"])
+        ).otherwise(F.lit(0.0))
+
+    def step(acc, x):
+        same = F.struct(
+            x.alias("prev"),
+            (acc["run"] + 1.0).alias("run"),
+            acc["clog"].alias("clog"),
+        )
+        new = F.struct(
+            x.alias("prev"), F.lit(1.0).alias("run"), close(acc).alias("clog")
+        )
+        return F.when(x == acc["prev"], same).otherwise(new)
+
+    zero = F.struct(
+        F.lit(None).cast("string").alias("prev"),
+        F.lit(0.0).alias("run"),
+        F.lit(0.0).alias("clog"),
+    )
+    clog = F.aggregate(F.array_sort(TOKENS()), zero, step, close)
+    return (
+        df.withColumn("n_tokens", F.size(TOKENS()).cast("long"))
+        .withColumn(
+            "entropy",
+            F.round(F.log2("n_tokens") - clog / F.col("n_tokens") + 1e-9, 6),
+        )
+        .where((F.col("entropy") >= 4.0) & (F.col("n_tokens") >= 20))
+    )
+
+
+def _st_containment(spark: SparkSession, sf: str, df: DataFrame) -> DataFrame:
+    # drop any doc ≥ 0.8-CONTAINED in a larger same-source doc (the
+    # dedup_containment_asym one-sided prefix join); ties on size keep
+    # the lower doc_id
+    toks = F.array_distinct(F.transform(TOKENS(), _md5_long))
+    docs = df.select("doc_id", "source", toks.alias("toks"))
+    pairs = _asym_containment_candidates(
+        docs.withColumn("sz", F.size("toks")), 7999, 10000
+    )
+    a, b = F.col("sz_a"), F.col("sz_b")
+    contained = F.round(F.col("inter").cast("double") / a.cast("double") + 1e-9, 4)
+    drops = (
+        pairs.where(
+            (contained >= 0.8)
+            & ((b > a) | ((b == a) & (F.col("doc_b") < F.col("doc_a"))))
+        )
+        .select(F.col("doc_a").alias("doc_id"))
+        .distinct()
+    )
+    return df.join(drops, "doc_id", "left_anti")
+
+
+def _st_semantic(spark: SparkSession, sf: str, df: DataFrame) -> DataFrame:
+    from .similarity import dedup_semdedup
+
+    drops = dedup_semdedup(spark, sf).select(F.col("vec_id").alias("doc_id"))
+    return df.join(drops, "doc_id", "left_anti")
+
+
+def _st_decontam(spark: SparkSession, sf: str, df: DataFrame) -> DataFrame:
+    from .similarity import sim_semantic_decontam
+
+    drops = sim_semantic_decontam(spark, sf).select("doc_id")
+    return df.join(drops, "doc_id", "left_anti")
+
+
+def _st_dsir_select(spark: SparkSession, sf: str, df: DataFrame) -> DataFrame:
+    # top ⌈n/2⌉ by DSIR log-weight, doc_id tiebreak, via the
+    # distributed global_prefix rank (never a single-partition window)
+    from ..util import global_prefix
+    from .text import text_dsir_weight
+
+    w = text_dsir_weight(spark, sf).select("doc_id", "log_weight")
+    scored = df.join(w, "doc_id").withColumn("_negw", -F.col("log_weight"))
+    return (
+        global_prefix(scored, ["_negw", "doc_id"])
+        .where(F.col("_prefix") <= F.expr("(_total + 1) DIV 2"))
+        .drop("_negw", "_prefix", "_total")
+    )
+
+
+def _checkpoint(df: DataFrame) -> DataFrame:
+    return df.localCheckpoint()  # eager: cuts lineage at build time
+
+
+class _Stage(NamedTuple):
+    spark: Callable[[SparkSession, str, DataFrame], DataFrame]
+    cut: Callable[[DataFrame], DataFrame] | None
+    count: str
+    sql: str  # CTEs reading {src}; the last one defines {dst}
+
+
+_STAGES = {
+    "url": _Stage(_st_url, _checkpoint, "n_after_url", """
+{url_ranked},
+udrops AS (SELECT doc_id FROM uranked WHERE rn > 1),
+{dst} AS (SELECT {src}.* FROM {src} ANTI JOIN udrops USING (doc_id))"""),
+    "domain": _Stage(_st_domain, persist_tracked, "n_after_domain", """
+rfp AS (
+  SELECT source,
+         md5(list_aggregate(list_sort(list_distinct({toks})),
+                            'string_agg', ' ')) AS f
+  FROM {src}),
+flagged AS (
+  SELECT source FROM rfp GROUP BY 1
+  HAVING ROUND(1.0 - COUNT(DISTINCT f) / CAST(COUNT(*) AS DOUBLE) + 1e-9, 4)
+         > 0.055),
+{dst} AS (SELECT {src}.* FROM {src} ANTI JOIN flagged USING (source))"""),
+    "exact": _Stage(_st_exact, persist_tracked, "n_after_exact", """
+keep1 AS (SELECT MIN(doc_id) AS doc_id FROM {src} GROUP BY md5(text)),
+{dst} AS (SELECT {src}.* FROM {src} SEMI JOIN keep1 USING (doc_id))"""),
+    "boilerplate": _Stage(
+        _st_boilerplate, persist_tracked, "n_after_boilerplate", """
+bad_para AS (SELECT doc_id FROM ({para_sql}) WHERE keep_doc = 0),
+{dst} AS (SELECT {src}.* FROM {src} ANTI JOIN bad_para USING (doc_id))"""),
+    "entropy": _Stage(_st_entropy, persist_tracked, "n_after_quality", """
+tok AS (SELECT doc_id, unnest({toks}) AS tok FROM {src}),
+cnt AS (SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS c
+        FROM tok GROUP BY 1, 2),
+ent AS (
+  SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_tokens,
+         ROUND(log2(CAST(SUM(c) AS BIGINT))
+               - SUM(CAST(c AS DOUBLE) * log2(c)) / CAST(SUM(c) AS BIGINT)
+               + 1e-9, 6) AS entropy
+  FROM cnt GROUP BY 1),
+{dst} AS (
+  SELECT {src}.*, ent.n_tokens, ent.entropy
+  FROM {src} JOIN ent USING (doc_id)
+  WHERE ent.entropy >= 4.0 AND ent.n_tokens >= 20)"""),
+    "containment": _Stage(
+        _st_containment, persist_tracked, "n_after_containment", """
+t2 AS (SELECT doc_id, source, list_distinct({toks}) AS toks FROM {src}),
+p AS (
+  SELECT a.doc_id AS da, b.doc_id AS db,
+         len(list_intersect(a.toks, b.toks)) AS inter,
+         len(a.toks) AS sza, len(b.toks) AS szb
+  FROM t2 a JOIN t2 b ON a.source = b.source AND a.doc_id <> b.doc_id),
+cdrops AS (
+  SELECT DISTINCT da AS doc_id FROM p
+  WHERE ROUND(CAST(inter AS DOUBLE) / sza + 1e-9, 4) >= 0.8
+    AND (szb > sza OR (szb = sza AND db < da))),
+{dst} AS (SELECT {src}.* FROM {src} ANTI JOIN cdrops USING (doc_id))"""),
+    "semantic": _Stage(_st_semantic, _checkpoint, "n_after_semantic", """
+e AS ({emb}),
+{ranked},
+assign AS (SELECT vec_id, cid AS cell FROM ranked WHERE rk = 1),
+m AS (SELECT a.vec_id, a.cell, e.v FROM assign a JOIN e USING (vec_id)),
+spairs AS (
+  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, {cos} AS cosine
+  FROM m a JOIN m b ON a.cell = b.cell AND a.vec_id < b.vec_id),
+sdrops AS (
+  SELECT DISTINCT vec_b AS doc_id FROM spairs WHERE cosine >= {tau}),
+{dst} AS (SELECT {src}.* FROM {src} ANTI JOIN sdrops USING (doc_id))"""),
+    "decontam": _Stage(_st_decontam, _checkpoint, "n_after_decontam", """
+decd AS (SELECT doc_id FROM ({dec_sql})),
+{dst} AS (SELECT {src}.* FROM {src} ANTI JOIN decd USING (doc_id))"""),
+    "dsir_select": _Stage(_st_dsir_select, _checkpoint, "n_after_dsir", """
+dsirw AS (SELECT doc_id, log_weight FROM ({dsir_sql})),
+scored AS (
+  SELECT {src}.*, dsirw.log_weight,
+         ROW_NUMBER() OVER (ORDER BY dsirw.log_weight DESC,
+                            {src}.doc_id ASC) AS _r,
+         COUNT(*) OVER () AS _n
+  FROM {src} JOIN dsirw USING (doc_id)),
+{dst} AS (
+  SELECT doc_id, source, text, n_tokens, entropy, log_weight
+  FROM scored WHERE _r <= (_n + 1) // 2)"""),
+}
+
+
+def _kept_n(kept: DataFrame, col: str, name: str) -> DataFrame:
+    return kept.groupBy("source").agg(
+        F.count(F.lit(1)).alias("n_kept"),
+        F.sum("n_tokens").alias("kept_tokens"),
+        F.round(F.avg(col) + 1e-9, 4).alias(name),
+    )
+
+
+_KEPT_N_SQL = """
+kept_n AS (
+  SELECT source, CAST(COUNT(*) AS BIGINT) AS n_kept,
+         CAST(SUM(n_tokens) AS BIGINT) AS kept_tokens,
+         ROUND(AVG({col}) + 1e-9, 4) AS {name}
+  FROM kept GROUP BY 1)"""
+
+
+# Tail Spark functions add per-source frames to ``parts`` (name →
+# (frame, select list or None)); _funnel LEFT-joins them onto the
+# count block in insertion order.
+def _tl_entropy(kept: DataFrame, parts: dict) -> None:
+    parts["kept_n"] = (_kept_n(kept, "entropy", "mean_entropy_kept"), None)
+
+
+def _tl_mix(kept: DataFrame, parts: dict) -> None:
+    # per-source q ∝ p^0.3 sampling shares over the kept token mass
+    kept_n = _kept_n(kept, "log_weight", "mean_dsir_kept").localCheckpoint()
+    tot = kept_n.agg(F.sum("kept_tokens").alias("tot"))
+    p = F.col("kept_tokens").cast("double") / F.col("tot").cast("double")
+    shares = persist_tracked(
+        kept_n.crossJoin(F.broadcast(tot)).select(
+            "source", p.alias("p"), F.pow(p, 0.3).alias("w")
+        )
+    )
+    z = shares.agg(F.sum("w").alias("z"))
+    wz = F.col("w") / F.col("z")
+    parts["kept_n"] = (kept_n, None)
+    parts["mix"] = (
+        shares.crossJoin(F.broadcast(z)),
+        [
+            F.col("source"),
+            F.round(wz + 1e-9, 6).alias("q_temp"),
+            F.round(wz / F.col("p") + 1e-9, 4).alias("boost"),
+        ],
+    )
+
+
+def _tl_epochs(kept: DataFrame, parts: dict) -> None:
+    # tokens_epoch_budget's accounting over the kept token mass
+    # (budget = 4× kept mass, Muennighoff repeat ceiling; compared on
+    # the ROUNDED epochs, house discipline) — extra columns of the mix
+    epochs = F.round(F.lit(4.0) * F.col("w") / F.col("z") / F.col("p") + 1e-9, 4)
+    parts["mix"][1].extend(
+        [epochs.alias("epochs_at_4x"), (epochs > 4.0).alias("over_repeat")]
+    )
+
+
+def _tl_bpe(kept: DataFrame, parts: dict) -> None:
+    # BPE vocab induced ON the kept corpus, kept token mass
+    # re-expressed in subword symbols (see v9's docstring)
+    from .text import _BPE_VOCAB_ROUNDS, _bpe_arr, _bpe_state_after_from
+
+    bstate = _bpe_state_after_from(kept, _BPE_VOCAB_ROUNDS)
+    bsyms = bstate.select("word", F.size(_bpe_arr()).cast("long").alias("n_syms"))
+    bpw = (
+        kept.select("source", F.explode(TOKENS()).alias("word"))
+        .where(F.col("word") != "")
+        .groupBy("source", "word")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    per_token = F.col("bpe_symbols_kept").cast("double") / F.col("_bt") + 1e-9
+    bpe_n = (
+        bpw.join(bsyms, "word")
+        .groupBy("source")
+        .agg(
+            F.sum(F.col("c") * F.col("n_syms")).alias("bpe_symbols_kept"),
+            F.sum("c").alias("_bt"),
+        )
+        .select(
+            "source",
+            "bpe_symbols_kept",
+            F.round(per_token, 6).alias("bpe_symbols_per_token"),
+        )
+    )
+    parts["bpe_n"] = (bpe_n, None)
+
+
+class _Tail(NamedTuple):
+    spark: Callable[[DataFrame, dict], None]
+    cut: Callable[[DataFrame], DataFrame] | None  # applied to kept
+    cols: tuple[str, ...]  # published columns, in order
+    joins: tuple[str, ...]  # CTEs LEFT-joined onto the count block
+    sql: str  # CTEs reading kept
+
+
+_TAILS = {
+    "entropy_summary": _Tail(
+        _tl_entropy,
+        None,
+        ("n_kept", "kept_tokens", "mean_entropy_kept"),
+        ("kept_n",),
+        _KEPT_N_SQL.format(col="entropy", name="mean_entropy_kept"),
+    ),
+    "mix": _Tail(
+        _tl_mix,
+        _checkpoint,
+        ("n_kept", "kept_tokens", "mean_dsir_kept", "q_temp", "boost"),
+        ("kept_n", "mix"),
+        _KEPT_N_SQL.format(col="log_weight", name="mean_dsir_kept") + """,
+tt AS (SELECT SUM(kept_tokens) AS tot FROM kept_n),
+sh AS (
+  SELECT kept_n.source,
+         CAST(kept_tokens AS DOUBLE) / tt.tot AS p,
+         pow(CAST(kept_tokens AS DOUBLE) / tt.tot, 0.3) AS w
+  FROM kept_n CROSS JOIN tt),
+zz AS (SELECT SUM(w) AS z FROM sh),
+mix AS (
+  SELECT sh.source,
+         ROUND(sh.w / zz.z + 1e-9, 6) AS q_temp,
+         ROUND(sh.w / zz.z / sh.p + 1e-9, 4) AS boost
+  FROM sh CROSS JOIN zz)""",
+    ),
+    "epochs": _Tail(
+        _tl_epochs,
+        None,
+        ("epochs_at_4x", "over_repeat"),
+        ("ep",),
+        """
+ep AS (
+  SELECT sh.source,
+         ROUND(4.0 * sh.w / zz.z / sh.p + 1e-9, 4) AS epochs_at_4x,
+         ROUND(4.0 * sh.w / zz.z / sh.p + 1e-9, 4) > 4.0 AS over_repeat
+  FROM sh CROSS JOIN zz)""",
+    ),
+    "bpe": _Tail(
+        _tl_bpe,
+        None,
+        ("bpe_symbols_kept", "bpe_symbols_per_token"),
+        ("bpe_n",),
+        """
+{bpe_rounds},
+bsyms AS (
+  SELECT word, CAST(len(string_split(substring(w, 2, length(w) - 2),
+                                     '||')) AS BIGINT) AS n_syms
+  FROM st{bpe_k}),
+bpw AS (
+  SELECT source, word, CAST(COUNT(*) AS BIGINT) AS c
+  FROM (SELECT source, unnest({toks}) AS word FROM kept)
+  WHERE word <> '' GROUP BY 1, 2),
+bpe_n AS (
+  SELECT source, CAST(SUM(c * n_syms) AS BIGINT) AS bpe_symbols_kept,
+         ROUND(CAST(SUM(c * n_syms) AS DOUBLE) / SUM(c) + 1e-9, 6)
+           AS bpe_symbols_per_token
+  FROM bpw JOIN bsyms USING (word) GROUP BY 1)""",
+    ),
+}
+
+# published columns that read 0, not NULL, for a source with nothing kept
+_ZERO_FILLED = ("n_kept", "kept_tokens", "bpe_symbols_kept")
+
+_VERSIONS = {
+    "v4": (("exact", "entropy", "containment"), ("entropy_summary",)),
+    "v5": (
+        ("domain", "exact", "entropy", "containment", "semantic"),
+        ("entropy_summary",),
+    ),
+    "v6": (
+        ("domain", "exact", "boilerplate", "entropy", "containment",
+         "semantic", "dsir_select"),
+        ("mix",),
+    ),
+    "v7": (
+        ("domain", "exact", "boilerplate", "entropy", "containment",
+         "semantic", "decontam", "dsir_select"),
+        ("mix",),
+    ),
+    "v8": (
+        ("url", "domain", "exact", "boilerplate", "entropy", "containment",
+         "semantic", "decontam", "dsir_select"),
+        ("mix", "epochs"),
+    ),
+    "v9": (
+        ("url", "domain", "exact", "boilerplate", "entropy", "containment",
+         "semantic", "decontam", "dsir_select"),
+        ("mix", "epochs", "bpe"),
+    ),
+}
+
+
+def _columns(version: str) -> list[tuple[str, bool]]:
+    """Published columns after (source, n_raw), each with whether a
+    missing value reads 0: the stage counts, then the tails' columns."""
+    stages, tails = _VERSIONS[version]
+    counted = [_STAGES[s].count for s in stages[:-1]]
+    tail_cols = [c for t in tails for c in _TAILS[t].cols]
+    return [(c, c in counted or c in _ZERO_FILLED) for c in counted + tail_cols]
+
+
+def _funnel(spark: SparkSession, sf: str, version: str) -> DataFrame:
+    """Build one funnel version from the stage list (see the block
+    comment above _st_url)."""
+    from functools import reduce
+
+    stages, tails = _VERSIONS[version]
+    docs = table(spark, sf, "documents").select("doc_id", "source", "text")
+    layers = [(docs, "n_raw")]
+    for i, name in enumerate(stages):
+        st = _STAGES[name]
+        df = st.spark(spark, sf, layers[-1][0])
+        if st.cut is not None and i < len(stages) - 1:
+            df = st.cut(df)
+        layers.append((df, st.count))
+    kept = layers.pop()[0]
+    for tail in tails:
+        cut = _TAILS[tail].cut
+        kept = cut(kept) if cut is not None else kept
+    tagged = reduce(
+        DataFrame.unionByName,
+        [
+            df.select("source", F.lit(i).alias("_st"))
+            for i, (df, _) in enumerate(layers)
+        ],
+    )
+    out = tagged.groupBy("source").agg(
+        *[
+            F.count(F.when(F.col("_st") == i, 1)).alias(c)
+            for i, (_, c) in enumerate(layers)
+        ]
+    )
+    parts: dict = {}
+    for tail in tails:
+        _TAILS[tail].spark(kept, parts)
+    for frame, cols in parts.values():
+        part = frame if cols is None else frame.select(*cols)
+        out = out.join(part, "source", "left")
+    zero_fill = [
+        F.coalesce(c, F.lit(0)).alias(c) if z else c
+        for c, z in _columns(version)
+    ]
+    return out.select("source", "n_raw", *zero_fill)
+
+
+def _funnel_sql(version: str) -> str:
+    """Compose one funnel version's DuckDB oracle from the stage list:
+    the stage CTE chain (the last stage defines kept AS MATERIALIZED —
+    DuckDB otherwise inlines the whole funnel into each tail
+    reference), the union-tagged count block, the tail CTEs, and the
+    COALESCEd output columns in stage order. Stage fragments embed
+    the published SQL of the ops they reuse (dedup_paragraph,
+    dedup_semdedup, sim_semantic_decontam, text_dsir_weight, the URL
+    ranking, text.py's BPE blocks) — compose-don't-copy: an edit to
+    any of them propagates here."""
+    from .similarity import (
+        _COS_SQL,
+        _EMB_SQL,
+        _IVF_GRAPH_RANKED_SQL,
+        _SEM_DECONTAM_SQL,
+        _SEMDEDUP_TAU,
+    )
+    from .text import (
+        _BPE_VOCAB_ROUNDS,
+        _DSIR_SQL,
+        _bpe_head_sql,
+        _bpe_round_block,
+    )
+
+    frags = dict(
+        toks=_TOKENS_SQL,
+        url_ranked=_url_ranked_ctes_sql().strip(),
+        para_sql=_PARAGRAPH_SQL.strip(),
+        emb=_EMB_SQL,
+        ranked=_IVF_GRAPH_RANKED_SQL,
+        cos=_COS_SQL.format(a="a", b="b"),
+        tau=_SEMDEDUP_TAU,
+        dec_sql=_SEM_DECONTAM_SQL.strip(),
+        dsir_sql=_DSIR_SQL.strip(),
+        bpe_rounds=(
+            _bpe_head_sql(src="kept", with_prefix="")
+            + "".join(map(_bpe_round_block, range(1, _BPE_VOCAB_ROUNDS + 1)))
+        ).strip(),
+        bpe_k=_BPE_VOCAB_ROUNDS,
+    )
+    stages, tails = _VERSIONS[version]
+    ctes = ["raw AS (SELECT doc_id, source, text FROM documents)"]
+    layers = [("raw", "n_raw")]
+    for name in stages[:-1]:
+        st = _STAGES[name]
+        ctes.append(st.sql.format(src=layers[-1][0], dst=f"l_{name}", **frags))
+        layers.append((f"l_{name}", st.count))
+    last = _STAGES[stages[-1]].sql.format(src=layers[-1][0], dst="kept", **frags)
+    head, _, body = last.rpartition("kept AS (")
+    ctes.append(head + "kept AS MATERIALIZED (" + body)
+    union = "\n    UNION ALL ".join(
+        f"SELECT source, {i} AS _st FROM {cte}"
+        for i, (cte, _) in enumerate(layers)
+    )
+    counts = ",\n         ".join(
+        f"COUNT(*) FILTER (WHERE _st = {i}) AS {c}"
+        for i, (_, c) in enumerate(layers)
+    )
+    ctes.append(
+        f"counts AS (\n  SELECT source,\n         {counts}\n"
+        f"  FROM ({union})\n  GROUP BY 1)"
+    )
+    ctes += [_TAILS[t].sql.format(**frags) for t in tails]
+    cols = ["source", "n_raw"] + [
+        f"COALESCE({c}, 0) AS {c}" if z else c for c, z in _columns(version)
+    ]
+    joins = "".join(
+        f"\nLEFT JOIN {j} USING (source)" for t in tails for j in _TAILS[t].joins
+    )
+    return "\nWITH {}\nSELECT {}\nFROM counts{}\n".format(
+        ",\n".join(c.strip() for c in ctes), ",\n       ".join(cols), joins
+    )
+
+
 def llm_data_pipeline_v4(spark: SparkSession, sf: str) -> DataFrame:
     """The round-10 corpus build — the curation recipe composed from
     this round's NEW primitives, still one Catalyst job:
@@ -2636,7 +3206,7 @@ def llm_data_pipeline_v4(spark: SparkSession, sf: str) -> DataFrame:
                                 Shannon entropy ≥ 4.0 bits AND ≥ 20
                                 tokens — the keyword-stuffing /
                                 boilerplate-loop cut; drops ~19% at the
-                                driver's SFs, measured before pinning)
+                                oracle SFs, measured before pinning)
           → containment scrub  (drop any survivor ≥ 0.8-CONTAINED in a
                                 larger same-source survivor — the
                                 dedup_containment_asym one-sided prefix
@@ -2654,152 +3224,12 @@ def llm_data_pipeline_v4(spark: SparkSession, sf: str) -> DataFrame:
     shows its row (zeros, NULL mean), which is exactly what a corpus
     curator needs to see.
 
-    Scale shape: one md5 dedup shuffle, one token wordcount + per-doc
-    aggregate (entropy), the asym-containment candidate join (linear
+    Scale shape: one md5 dedup shuffle, the per-row sort-and-fold
+    entropy (no shuffle), the asym-containment candidate join (linear
     token-index shuffle, bounded broadcast), one anti join, and
     per-source aggregates. Nothing corpus-sized broadcasts; no
     windows over raw docs."""
-    docs = table(spark, sf, "documents").select("doc_id", "source", "text")
-    keep1 = docs.groupBy(F.md5("text")).agg(F.min("doc_id").alias("doc_id"))
-    d1 = persist_tracked(
-        docs.join(keep1.select("doc_id"), "doc_id", "left_semi")
-    )
-    tok = d1.select("doc_id", F.explode(TOKENS()).alias("tok"))
-    cnt = tok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c"))
-    ent = cnt.groupBy("doc_id").agg(
-        F.sum("c").alias("n_tokens"),
-        F.sum(F.col("c").cast("double") * F.log2("c")).alias("_clog"),
-    )
-    ent = ent.select(
-        "doc_id",
-        "n_tokens",
-        F.round(
-            F.log2("n_tokens") - F.col("_clog") / F.col("n_tokens") + 1e-9, 6
-        ).alias("entropy"),
-    )
-    d2 = persist_tracked(
-        d1.join(ent, "doc_id").where(
-            (F.col("entropy") >= 4.0) & (F.col("n_tokens") >= 20)
-        )
-    )
-    docs2 = d2.select(
-        "doc_id",
-        "source",
-        F.array_distinct(
-            F.transform(TOKENS(), _md5_long)
-        ).alias("toks"),
-    ).withColumn("sz", F.size("toks"))
-    pairs = _asym_containment_candidates(docs2, 7999, 10000)
-    containment = F.round(
-        F.col("inter").cast("double") / F.col("sz_a").cast("double") + 1e-9,
-        4,
-    )
-    drops = (
-        pairs.where(
-            (containment >= 0.8)
-            & (
-                (F.col("sz_b") > F.col("sz_a"))
-                | (
-                    (F.col("sz_b") == F.col("sz_a"))
-                    & (F.col("doc_b") < F.col("doc_a"))
-                )
-            )
-        )
-        .select(F.col("doc_a").alias("doc_id"))
-        .distinct()
-    )
-    kept = d2.join(drops, "doc_id", "left_anti")
-    # funnel counts in ONE union-pass — see _pipeline_v67's count
-    # block for the rationale (optimization r16, VERDICT r15 item 5)
-    from functools import reduce
-
-    layers = [
-        (docs, "n_raw"),
-        (d1, "n_after_exact"),
-        (d2, "n_after_quality"),
-    ]
-    tagged = reduce(
-        DataFrame.unionByName,
-        [
-            df.select("source", F.lit(i).alias("_st"))
-            for i, (df, _) in enumerate(layers)
-        ],
-    )
-    counts = tagged.groupBy("source").agg(
-        *[
-            F.count(F.when(F.col("_st") == i, 1)).alias(name)
-            for i, (_, name) in enumerate(layers)
-        ]
-    )
-    kept_n = kept.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_kept"),
-        F.sum("n_tokens").alias("kept_tokens"),
-        F.round(F.avg("entropy") + 1e-9, 4).alias("mean_entropy_kept"),
-    )
-    return (
-        counts.join(kept_n, "source", "left")
-        .select(
-            "source",
-            "n_raw",
-            F.coalesce("n_after_exact", F.lit(0)).alias("n_after_exact"),
-            F.coalesce("n_after_quality", F.lit(0)).alias("n_after_quality"),
-            F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
-            F.coalesce("kept_tokens", F.lit(0)).alias("kept_tokens"),
-            "mean_entropy_kept",
-        )
-    )
-
-
-_V4_SQL = """
-WITH raw AS (SELECT doc_id, source, text FROM documents),
-keep1 AS (SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
-d1 AS (SELECT r.* FROM raw r SEMI JOIN keep1 USING (doc_id)),
-tok AS (SELECT doc_id, unnest({toks}) AS tok FROM d1),
-cnt AS (SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS c
-        FROM tok GROUP BY 1, 2),
-ent AS (
-  SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_tokens,
-         ROUND(log2(CAST(SUM(c) AS BIGINT))
-               - SUM(CAST(c AS DOUBLE) * log2(c)) / CAST(SUM(c) AS BIGINT)
-               + 1e-9, 6) AS entropy
-  FROM cnt GROUP BY 1),
-d2 AS (
-  SELECT d1.doc_id, d1.source, d1.text, ent.n_tokens, ent.entropy
-  FROM d1 JOIN ent USING (doc_id)
-  WHERE ent.entropy >= 4.0 AND ent.n_tokens >= 20),
-t2 AS (SELECT doc_id, source, list_distinct({toks}) AS toks FROM d2),
-p AS (
-  SELECT a.doc_id AS da, b.doc_id AS db,
-         len(list_intersect(a.toks, b.toks)) AS inter,
-         len(a.toks) AS sza, len(b.toks) AS szb
-  FROM t2 a JOIN t2 b ON a.source = b.source AND a.doc_id <> b.doc_id),
-drops AS (
-  SELECT DISTINCT da AS doc_id FROM p
-  WHERE ROUND(CAST(inter AS DOUBLE) / sza + 1e-9, 4) >= 0.8
-    AND (szb > sza OR (szb = sza AND db < da))),
-kept AS (SELECT d2.* FROM d2 ANTI JOIN drops USING (doc_id)),
-raw_n AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_raw
-          FROM raw GROUP BY 1),
-d1_n AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_after_exact
-         FROM d1 GROUP BY 1),
-d2_n AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_after_quality
-         FROM d2 GROUP BY 1),
-kept_n AS (
-  SELECT source, CAST(COUNT(*) AS BIGINT) AS n_kept,
-         CAST(SUM(n_tokens) AS BIGINT) AS kept_tokens,
-         ROUND(AVG(entropy) + 1e-9, 4) AS mean_entropy_kept
-  FROM kept GROUP BY 1)
-SELECT raw_n.source, raw_n.n_raw,
-       COALESCE(d1_n.n_after_exact, 0)   AS n_after_exact,
-       COALESCE(d2_n.n_after_quality, 0) AS n_after_quality,
-       COALESCE(kept_n.n_kept, 0)        AS n_kept,
-       COALESCE(kept_n.kept_tokens, 0)   AS kept_tokens,
-       kept_n.mean_entropy_kept
-FROM raw_n
-LEFT JOIN d1_n   USING (source)
-LEFT JOIN d2_n   USING (source)
-LEFT JOIN kept_n USING (source)
-""".format(toks=_TOKENS_SQL)
+    return _funnel(spark, sf, "v4")
 
 
 def llm_data_pipeline_v5(spark: SparkSession, sf: str) -> DataFrame:
@@ -2841,226 +3271,12 @@ def llm_data_pipeline_v5(spark: SparkSession, sf: str) -> DataFrame:
 
     Scale shape: the domain flag is one fingerprint aggregate
     (|domains| rows, broadcast back); then v4's shuffles (md5 dedup,
-    token wordcount, asym-containment candidate join, anti join);
+    asym-containment candidate join, anti join);
     the semantic drop list is cell-blocked pairs over the embedding
     table (n²/(2·k_cells), √n-cell sizing at production — see
     dedup_semdedup) anti-joined on doc_id. Nothing corpus-sized
     broadcasts."""
-    from .similarity import dedup_semdedup
-
-    docs = table(spark, sf, "documents").select("doc_id", "source", "text")
-    fp = F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(TOKENS()))))
-    flagged = (
-        docs.select("source", fp.alias("f"))
-        .groupBy("source")
-        .agg(
-            F.round(
-                1.0
-                - F.countDistinct("f").cast("double") / F.count(F.lit(1))
-                + 1e-9,
-                4,
-            ).alias("dr")
-        )
-        .where(F.col("dr") > 0.055)
-        .select("source")
-    )
-    d0 = persist_tracked(docs.join(F.broadcast(flagged), "source", "left_anti"))
-    keep1 = d0.groupBy(F.md5("text")).agg(F.min("doc_id").alias("doc_id"))
-    d1 = persist_tracked(
-        d0.join(keep1.select("doc_id"), "doc_id", "left_semi")
-    )
-    tok = d1.select("doc_id", F.explode(TOKENS()).alias("tok"))
-    cnt = tok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c"))
-    ent = cnt.groupBy("doc_id").agg(
-        F.sum("c").alias("n_tokens"),
-        F.sum(F.col("c").cast("double") * F.log2("c")).alias("_clog"),
-    )
-    ent = ent.select(
-        "doc_id",
-        "n_tokens",
-        F.round(
-            F.log2("n_tokens") - F.col("_clog") / F.col("n_tokens") + 1e-9, 6
-        ).alias("entropy"),
-    )
-    d2 = persist_tracked(
-        d1.join(ent, "doc_id").where(
-            (F.col("entropy") >= 4.0) & (F.col("n_tokens") >= 20)
-        )
-    )
-    docs2 = d2.select(
-        "doc_id",
-        "source",
-        F.array_distinct(
-            F.transform(TOKENS(), _md5_long)
-        ).alias("toks"),
-    ).withColumn("sz", F.size("toks"))
-    pairs = _asym_containment_candidates(docs2, 7999, 10000)
-    containment = F.round(
-        F.col("inter").cast("double") / F.col("sz_a").cast("double") + 1e-9,
-        4,
-    )
-    cdrops = (
-        pairs.where(
-            (containment >= 0.8)
-            & (
-                (F.col("sz_b") > F.col("sz_a"))
-                | (
-                    (F.col("sz_b") == F.col("sz_a"))
-                    & (F.col("doc_b") < F.col("doc_a"))
-                )
-            )
-        )
-        .select(F.col("doc_a").alias("doc_id"))
-        .distinct()
-    )
-    kept_c = persist_tracked(d2.join(cdrops, "doc_id", "left_anti"))
-    sem_drops = dedup_semdedup(spark, sf).select(
-        F.col("vec_id").alias("doc_id")
-    )
-    kept = kept_c.join(sem_drops, "doc_id", "left_anti")
-    # funnel counts in ONE union-pass — see _pipeline_v67's count
-    # block for the rationale (optimization r16, VERDICT r15 item 5)
-    from functools import reduce
-
-    layers = [
-        (docs, "n_raw"),
-        (d0, "n_after_domain"),
-        (d1, "n_after_exact"),
-        (d2, "n_after_quality"),
-        (kept_c, "n_after_containment"),
-    ]
-    tagged = reduce(
-        DataFrame.unionByName,
-        [
-            df.select("source", F.lit(i).alias("_st"))
-            for i, (df, _) in enumerate(layers)
-        ],
-    )
-    counts = tagged.groupBy("source").agg(
-        *[
-            F.count(F.when(F.col("_st") == i, 1)).alias(name)
-            for i, (_, name) in enumerate(layers)
-        ]
-    )
-    kept_n = kept.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_kept"),
-        F.sum("n_tokens").alias("kept_tokens"),
-        F.round(F.avg("entropy") + 1e-9, 4).alias("mean_entropy_kept"),
-    )
-    return (
-        counts.join(kept_n, "source", "left")
-        .select(
-            "source",
-            "n_raw",
-            F.coalesce("n_after_domain", F.lit(0)).alias("n_after_domain"),
-            F.coalesce("n_after_exact", F.lit(0)).alias("n_after_exact"),
-            F.coalesce("n_after_quality", F.lit(0)).alias("n_after_quality"),
-            F.coalesce("n_after_containment", F.lit(0)).alias(
-                "n_after_containment"
-            ),
-            F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
-            F.coalesce("kept_tokens", F.lit(0)).alias("kept_tokens"),
-            "mean_entropy_kept",
-        )
-    )
-
-
-def _v5_sql() -> str:
-    """Composed v5 oracle: the v4 CTE chain bracketed by the domain
-    flag (fingerprint aggregate) and the dedup_semdedup drop CTEs
-    (imported fragments from similarity so a cell/cosine edit there
-    propagates here — the r7 compose-don't-copy rule)."""
-    from .similarity import (
-        _COS_SQL,
-        _EMB_SQL,
-        _IVF_GRAPH_RANKED_SQL,
-        _SEMDEDUP_TAU,
-    )
-
-    return """
-WITH raw AS (SELECT doc_id, source, text FROM documents),
-rfp AS (
-  SELECT source,
-         md5(list_aggregate(list_sort(list_distinct({toks})),
-                            'string_agg', ' ')) AS f
-  FROM documents),
-flagged AS (
-  SELECT source FROM rfp GROUP BY 1
-  HAVING ROUND(1.0 - COUNT(DISTINCT f) / CAST(COUNT(*) AS DOUBLE) + 1e-9, 4)
-         > 0.055),
-d0 AS (SELECT raw.* FROM raw ANTI JOIN flagged USING (source)),
-keep1 AS (SELECT MIN(doc_id) AS doc_id FROM d0 GROUP BY md5(text)),
-d1 AS (SELECT d0.* FROM d0 SEMI JOIN keep1 USING (doc_id)),
-tok AS (SELECT doc_id, unnest({toks}) AS tok FROM d1),
-cnt AS (SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS c
-        FROM tok GROUP BY 1, 2),
-ent AS (
-  SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_tokens,
-         ROUND(log2(CAST(SUM(c) AS BIGINT))
-               - SUM(CAST(c AS DOUBLE) * log2(c)) / CAST(SUM(c) AS BIGINT)
-               + 1e-9, 6) AS entropy
-  FROM cnt GROUP BY 1),
-d2 AS (
-  SELECT d1.doc_id, d1.source, d1.text, ent.n_tokens, ent.entropy
-  FROM d1 JOIN ent USING (doc_id)
-  WHERE ent.entropy >= 4.0 AND ent.n_tokens >= 20),
-t2 AS (SELECT doc_id, source, list_distinct({toks}) AS toks FROM d2),
-p AS (
-  SELECT a.doc_id AS da, b.doc_id AS db,
-         len(list_intersect(a.toks, b.toks)) AS inter,
-         len(a.toks) AS sza, len(b.toks) AS szb
-  FROM t2 a JOIN t2 b ON a.source = b.source AND a.doc_id <> b.doc_id),
-cdrops AS (
-  SELECT DISTINCT da AS doc_id FROM p
-  WHERE ROUND(CAST(inter AS DOUBLE) / sza + 1e-9, 4) >= 0.8
-    AND (szb > sza OR (szb = sza AND db < da))),
-kept_c AS (SELECT d2.* FROM d2 ANTI JOIN cdrops USING (doc_id)),
-e AS ({emb}),
-{ranked},
-assign AS (SELECT vec_id, cid AS cell FROM ranked WHERE rk = 1),
-m AS (SELECT a.vec_id, a.cell, e.v FROM assign a JOIN e USING (vec_id)),
-spairs AS (
-  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, {cos} AS cosine
-  FROM m a JOIN m b ON a.cell = b.cell AND a.vec_id < b.vec_id),
-sdrops AS (
-  SELECT DISTINCT vec_b AS doc_id FROM spairs WHERE cosine >= {tau}),
-kept AS (SELECT kept_c.* FROM kept_c ANTI JOIN sdrops USING (doc_id)),
-raw_n AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_raw
-          FROM raw GROUP BY 1),
-d0_n AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_after_domain
-         FROM d0 GROUP BY 1),
-d1_n AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_after_exact
-         FROM d1 GROUP BY 1),
-d2_n AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_after_quality
-         FROM d2 GROUP BY 1),
-cont_n AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_after_containment
-           FROM kept_c GROUP BY 1),
-kept_n AS (
-  SELECT source, CAST(COUNT(*) AS BIGINT) AS n_kept,
-         CAST(SUM(n_tokens) AS BIGINT) AS kept_tokens,
-         ROUND(AVG(entropy) + 1e-9, 4) AS mean_entropy_kept
-  FROM kept GROUP BY 1)
-SELECT raw_n.source, raw_n.n_raw,
-       COALESCE(d0_n.n_after_domain, 0)        AS n_after_domain,
-       COALESCE(d1_n.n_after_exact, 0)         AS n_after_exact,
-       COALESCE(d2_n.n_after_quality, 0)       AS n_after_quality,
-       COALESCE(cont_n.n_after_containment, 0) AS n_after_containment,
-       COALESCE(kept_n.n_kept, 0)              AS n_kept,
-       COALESCE(kept_n.kept_tokens, 0)         AS kept_tokens,
-       kept_n.mean_entropy_kept
-FROM raw_n
-LEFT JOIN d0_n   USING (source)
-LEFT JOIN d1_n   USING (source)
-LEFT JOIN d2_n   USING (source)
-LEFT JOIN cont_n USING (source)
-LEFT JOIN kept_n USING (source)
-""".format(
-        toks=_TOKENS_SQL,
-        emb=_EMB_SQL,
-        ranked=_IVF_GRAPH_RANKED_SQL,
-        cos=_COS_SQL.format(a="a", b="b"),
-        tau=_SEMDEDUP_TAU,
-    )
+    return _funnel(spark, sf, "v5")
 
 
 def llm_data_pipeline_v6(spark: SparkSession, sf: str) -> DataFrame:
@@ -3138,7 +3354,7 @@ def llm_data_pipeline_v6(spark: SparkSession, sf: str) -> DataFrame:
     executor-loss deployment switch the three cuts to
     reliable checkpoint() on a cluster-visible checkpoint dir (same
     semantics, adds an HDFS/S3 write)."""
-    return _pipeline_v67(spark, sf, with_decontam=False)
+    return _funnel(spark, sf, "v6")
 
 
 def llm_data_pipeline_v7(spark: SparkSession, sf: str) -> DataFrame:
@@ -3157,7 +3373,7 @@ def llm_data_pipeline_v7(spark: SparkSession, sf: str) -> DataFrame:
     Funnel gains one column (n_after_decontam, between
     n_after_semantic and n_kept); everything else — stages, oracle
     discipline, localCheckpoint failure-mode trade — is v6's, shared
-    via _pipeline_v67 so the two keys cannot drift apart. The
+    via the stage list (_VERSIONS) so the two keys cannot drift apart. The
     composed oracle embeds sim_semantic_decontam's FULL published SQL
     as a subquery (compose-don't-copy).
 
@@ -3171,7 +3387,7 @@ def llm_data_pipeline_v7(spark: SparkSession, sf: str) -> DataFrame:
     structural tests cover by certifying sim_semantic_decontam's own
     drop list brute-force (test_curation_r13). All other margins
     inherited from v6."""
-    return _pipeline_v67(spark, sf, with_decontam=True)
+    return _funnel(spark, sf, "v7")
 
 
 def llm_data_pipeline_v8(spark: SparkSession, sf: str) -> DataFrame:
@@ -3198,7 +3414,7 @@ def llm_data_pipeline_v8(spark: SparkSession, sf: str) -> DataFrame:
     Funnel gains n_after_url (between n_raw and n_after_domain) and
     the two epoch columns; everything else — stages, compose-don't-
     copy oracle discipline, localCheckpoint failure-mode trade — is
-    v7's, shared via _pipeline_v67 so the three variants cannot
+    v7's, shared via the stage list so the three variants cannot
     drift. The composed oracle embeds the _url_ranked_ctes_sql block
     (which itself embeds text_bigram_lm_score's published SQL) and
     the epoch formula verbatim.
@@ -3211,7 +3427,7 @@ def llm_data_pipeline_v8(spark: SparkSession, sf: str) -> DataFrame:
     boundary-dependent); epoch margins inherit tokens_epoch_budget's
     audit (over_repeat both-verdict split measured 9/11 of 20 at
     sf0.01 on the kept mass). All other margins inherited from v7."""
-    return _pipeline_v67(spark, sf, with_decontam=True, with_url_stage=True)
+    return _funnel(spark, sf, "v8")
 
 
 def llm_data_pipeline_v9(spark: SparkSession, sf: str) -> DataFrame:
@@ -3228,7 +3444,7 @@ def llm_data_pipeline_v9(spark: SparkSession, sf: str) -> DataFrame:
 
     Funnel gains those two columns; everything else — stages,
     compose-don't-copy oracle discipline, localCheckpoint trades — is
-    v8's, shared via _pipeline_v67 so the four variants cannot drift.
+    v8's, shared via the stage list so the four variants cannot drift.
     The composed oracle splices text.py's BPE head/round CTE blocks
     (the same templates text_bpe_vocab/text_bpe_encode compose from)
     with the induction head re-pointed at the kept CTE.
@@ -3242,598 +3458,8 @@ def llm_data_pipeline_v9(spark: SparkSession, sf: str) -> DataFrame:
     sf. Oracle note: the kept CTE is MATERIALIZED — DuckDB otherwise
     inlines the whole funnel into each of the BPE tail's three
     references (89.7 s → 7.5 s at sf0.01, values identical)."""
-    return _pipeline_v67(
-        spark,
-        sf,
-        with_decontam=True,
-        with_url_stage=True,
-        with_bpe_tail=True,
-    )
+    return _funnel(spark, sf, "v9")
 
-
-def _pipeline_v67(
-    spark: SparkSession,
-    sf: str,
-    with_decontam: bool,
-    with_url_stage: bool = False,
-    with_bpe_tail: bool = False,
-) -> DataFrame:
-    from .similarity import dedup_semdedup, sim_semantic_decontam
-    from .text import text_dsir_weight
-
-    docs = table(spark, sf, "documents").select("doc_id", "source", "text")
-    if with_url_stage:
-        # v8 stage 0 — URL-grain keep-best dedup BEFORE any text
-        # statistic: the domain dup-ratio flagging below runs on the
-        # post-URL corpus (a mirror crawled twice must not count
-        # toward its source's dup ratio), which is why the stage is
-        # spliced here rather than anti-joined at the tail.
-        # localCheckpoint, NOT persist (the funnel-tail rule applied
-        # at the head): a persisted base ABOVE the whole funnel puts
-        # its InMemoryRelation — whose subtree now contains the
-        # canon-URL window + the bigram-LM aggregates — into every
-        # funnel layer's printed plan, and AQE's explain-string
-        # regeneration turned that into driver CPU: v8 measured
-        # 23.0 s persisted vs 10.2 s checkpointed at sf0.1 (warm,
-        # same machine, back-to-back). Same lineage-non-recoverable
-        # trade as the three tail cuts, documented in v6's docstring.
-        url_dups = _url_ranked(spark, sf).where(F.col("_rn") > 1).select(
-            "doc_id"
-        )
-        base = docs.join(url_dups, "doc_id", "left_anti").localCheckpoint()
-    else:
-        base = docs
-    fp = F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(TOKENS()))))
-    flagged = (
-        base.select("source", fp.alias("f"))
-        .groupBy("source")
-        .agg(
-            F.round(
-                1.0
-                - F.countDistinct("f").cast("double") / F.count(F.lit(1))
-                + 1e-9,
-                4,
-            ).alias("dr")
-        )
-        .where(F.col("dr") > 0.055)
-        .select("source")
-    )
-    d0 = persist_tracked(base.join(F.broadcast(flagged), "source", "left_anti"))
-    keep1 = d0.groupBy(F.md5("text")).agg(F.min("doc_id").alias("doc_id"))
-    d1 = persist_tracked(
-        d0.join(keep1.select("doc_id"), "doc_id", "left_semi")
-    )
-    bad_para = (
-        dedup_paragraph(spark, sf)
-        .where(F.col("keep_doc") == 0)
-        .select("doc_id")
-    )
-    d1b = persist_tracked(d1.join(bad_para, "doc_id", "left_anti"))
-    # Per-doc token entropy as a PER-ROW array expression (optimization
-    # r15, guide §2.4): the pre-r15 shape exploded the token stream,
-    # hash-aggregated (doc, tok) counts, re-aggregated per doc, and
-    # joined the result back — two corpus-token shuffles plus a join
-    # per pipeline run. Token counts, n_tokens and the entropy formula
-    # are row-local quantities of the token array, so they fuse into
-    # the projection. Per-row cost class (optimization r16, ADVICE r15
-    # item 1): the r15 fold counted via filter-per-distinct-token —
-    # O(|distinct|·|toks|) interpreted string compares per row,
-    # quadratic on long documents. Now: ONE array_sort (O(L log L))
-    # and a run-length fold over the sorted array (O(L)) accumulating
-    # Σ c·log2 c directly — linear-log per row, never corpus-shaped.
-    # Values: identical (token, count) multiset → identical terms;
-    # only float accumulation order differs (sorted-token order vs
-    # the r15 first-occurrence order vs the oracle's hash-agg order),
-    # which the 6dp rounding absorbs — the established cross-engine
-    # tolerance (re-swept against the unchanged oracle at 2 SFs).
-    _toks_all = TOKENS()
-    _n_tokens = F.size(_toks_all).cast("long")
-
-    def _run_step(acc, x):
-        # acc = (prev token, current run length, Σ c·log2 c of closed
-        # runs); closing a run adds its c·log2 c term (log2(1) = 0
-        # terms are no-ops, same as the r15 per-distinct transform)
-        close = acc["clog"] + F.when(
-            acc["run"] > 0.0, acc["run"] * F.log2(acc["run"])
-        ).otherwise(F.lit(0.0))
-        return F.when(
-            x == acc["prev"],
-            F.struct(
-                x.alias("prev"),
-                (acc["run"] + 1.0).alias("run"),
-                acc["clog"].alias("clog"),
-            ),
-        ).otherwise(
-            F.struct(
-                x.alias("prev"), F.lit(1.0).alias("run"), close.alias("clog")
-            )
-        )
-
-    _clog = F.aggregate(
-        F.array_sort(_toks_all),
-        F.struct(
-            F.lit(None).cast("string").alias("prev"),
-            F.lit(0.0).alias("run"),
-            F.lit(0.0).alias("clog"),
-        ),
-        _run_step,
-        lambda acc: acc["clog"]
-        + F.when(acc["run"] > 0.0, acc["run"] * F.log2(acc["run"])).otherwise(
-            F.lit(0.0)
-        ),
-    )
-    d2 = persist_tracked(
-        d1b.withColumn("n_tokens", _n_tokens)
-        .withColumn(
-            "entropy",
-            F.round(
-                F.log2("n_tokens") - _clog / F.col("n_tokens") + 1e-9, 6
-            ),
-        )
-        .where((F.col("entropy") >= 4.0) & (F.col("n_tokens") >= 20))
-    )
-    docs2 = d2.select(
-        "doc_id",
-        "source",
-        F.array_distinct(
-            F.transform(TOKENS(), _md5_long)
-        ).alias("toks"),
-    ).withColumn("sz", F.size("toks"))
-    pairs = _asym_containment_candidates(docs2, 7999, 10000)
-    containment = F.round(
-        F.col("inter").cast("double") / F.col("sz_a").cast("double") + 1e-9,
-        4,
-    )
-    cdrops = (
-        pairs.where(
-            (containment >= 0.8)
-            & (
-                (F.col("sz_b") > F.col("sz_a"))
-                | (
-                    (F.col("sz_b") == F.col("sz_a"))
-                    & (F.col("doc_b") < F.col("doc_a"))
-                )
-            )
-        )
-        .select(F.col("doc_a").alias("doc_id"))
-        .distinct()
-    )
-    kept_c = persist_tracked(d2.join(cdrops, "doc_id", "left_anti"))
-    sem_drops = dedup_semdedup(spark, sf).select(
-        F.col("vec_id").alias("doc_id")
-    )
-    # localCheckpoint, not persist, from here down (the dedup_clusters
-    # rule: cut lineage where lineage itself is the pathology). With
-    # persists, every layer's InMemoryRelation PRINTS its full cached
-    # subtree, each funnel layer is referenced twice above its
-    # relation, and AQE regenerates the explain string on every
-    # adaptive update — measured 2.9 MB of plan text and ~100 s of
-    # driver CPU in generateTreeString at sf0.001 (the string-budget
-    # cap doesn't help: the TRAVERSAL is what's combinatorial). Three
-    # cuts (kept_sem, kept, kept_n) flatten the tail to LogicalRDD
-    # leaves: 107 s → ~0.3 s per action.
-    kept_sem = kept_c.join(sem_drops, "doc_id", "left_anti").localCheckpoint()
-    if with_decontam:
-        dec_drops = sim_semantic_decontam(spark, sf).select("doc_id")
-        kept_dec = kept_sem.join(
-            dec_drops, "doc_id", "left_anti"
-        ).localCheckpoint()
-    else:
-        kept_dec = kept_sem
-    from ..util import global_prefix
-
-    dsir_w = text_dsir_weight(spark, sf).select("doc_id", "log_weight")
-    scored = kept_dec.join(dsir_w, "doc_id").withColumn(
-        "_negw", -F.col("log_weight")
-    )
-    kept = (
-        global_prefix(scored, ["_negw", "doc_id"])
-        .where(F.col("_prefix") <= F.expr("(_total + 1) DIV 2"))
-        .drop("_negw", "_prefix", "_total")
-        .localCheckpoint()
-    )
-    # Funnel counts in ONE pass (optimization r16, guide §2.3/§2.4 —
-    # VERDICT r15 item 5): the r15 shape ran NINE separate per-source
-    # count aggregates (one per funnel layer), each its own subtree +
-    # tiny exchange, meeting in a 9-deep left-join chain of broadcast
-    # builds. Every count is count-per-source of a layer frame, so one
-    # union of (source, stage-tag) rows + ONE map-side-combinable
-    # conditional aggregate computes them all: 9 exchanges + 8 joins →
-    # 1 exchange + 0 joins for the count block. Values identical:
-    # F.count(F.when(tag = i, 1)) over the union ≡ F.count(F.lit(1))
-    # per layer, and a source absent from a layer counts 0 — exactly
-    # what the old LEFT JOIN + COALESCE(…, 0) produced (every layer is
-    # a subset of docs, so the union's source set = docs' source set,
-    # the old join chain's raw_n driving side).
-    from functools import reduce
-
-    layers: list[tuple[DataFrame, str]] = [(docs, "n_raw")]
-    if with_url_stage:
-        layers.append((base, "n_after_url"))
-    layers += [
-        (d0, "n_after_domain"),
-        (d1, "n_after_exact"),
-        (d1b, "n_after_boilerplate"),
-        (d2, "n_after_quality"),
-        (kept_c, "n_after_containment"),
-        (kept_sem, "n_after_semantic"),
-    ]
-    if with_decontam:
-        layers.append((kept_dec, "n_after_decontam"))
-    tagged = reduce(
-        DataFrame.unionByName,
-        [
-            df.select("source", F.lit(i).alias("_st"))
-            for i, (df, _) in enumerate(layers)
-        ],
-    )
-    counts = tagged.groupBy("source").agg(
-        *[
-            F.count(F.when(F.col("_st") == i, 1)).alias(name)
-            for i, (_, name) in enumerate(layers)
-        ]
-    )
-    kept_n = (
-        kept.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_kept"),
-            F.sum("n_tokens").alias("kept_tokens"),
-            F.round(F.avg("log_weight") + 1e-9, 4).alias("mean_dsir_kept"),
-        )
-        .localCheckpoint()
-    )
-    tot = kept_n.agg(F.sum("kept_tokens").alias("tot"))
-    p = F.col("kept_tokens").cast("double") / F.col("tot").cast("double")
-    shares = persist_tracked(
-        kept_n.crossJoin(F.broadcast(tot)).select(
-            "source", p.alias("p"), F.pow(p, 0.3).alias("w")
-        )
-    )
-    z = shares.agg(F.sum("w").alias("z"))
-    epochs = F.round(
-        F.lit(4.0) * F.col("w") / F.col("z") / F.col("p") + 1e-9, 4
-    )
-    mix_cols = [
-        F.col("source"),
-        F.round(F.col("w") / F.col("z") + 1e-9, 6).alias("q_temp"),
-        F.round(F.col("w") / F.col("z") / F.col("p") + 1e-9, 4).alias(
-            "boost"
-        ),
-    ]
-    if with_url_stage:
-        # v8 tail: tokens_epoch_budget's accounting over the KEPT
-        # token mass (budget = 4× kept mass, Muennighoff repeat
-        # ceiling; compared on the ROUNDED epochs, house discipline)
-        mix_cols += [
-            epochs.alias("epochs_at_4x"),
-            (epochs > 4.0).alias("over_repeat"),
-        ]
-    mix = shares.crossJoin(F.broadcast(z)).select(*mix_cols)
-    if with_bpe_tail:
-        # v9 tail: BPE vocab induced ON the kept corpus, kept token
-        # mass re-expressed in subword symbols (see v9's docstring)
-        from .text import _BPE_VOCAB_ROUNDS, _bpe_arr, _bpe_state_after_from
-
-        bstate = _bpe_state_after_from(kept, _BPE_VOCAB_ROUNDS)
-        bsyms = bstate.select(
-            "word", F.size(_bpe_arr()).cast("long").alias("n_syms")
-        )
-        bpw = (
-            kept.select("source", F.explode(TOKENS()).alias("word"))
-            .where(F.col("word") != "")
-            .groupBy("source", "word")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        bpe_n = (
-            bpw.join(bsyms, "word")
-            .groupBy("source")
-            .agg(
-                F.sum(F.col("c") * F.col("n_syms")).alias(
-                    "bpe_symbols_kept"
-                ),
-                F.sum("c").alias("_bt"),
-            )
-            .select(
-                "source",
-                "bpe_symbols_kept",
-                F.round(
-                    F.col("bpe_symbols_kept").cast("double") / F.col("_bt")
-                    + 1e-9,
-                    6,
-                ).alias("bpe_symbols_per_token"),
-            )
-        )
-    out = counts.join(kept_n, "source", "left").join(mix, "source", "left")
-    if with_bpe_tail:
-        out = out.join(bpe_n, "source", "left")
-    cols = [
-        "source",
-        "n_raw",
-    ]
-    if with_url_stage:
-        cols.append(
-            F.coalesce("n_after_url", F.lit(0)).alias("n_after_url")
-        )
-    cols += [
-        F.coalesce("n_after_domain", F.lit(0)).alias("n_after_domain"),
-        F.coalesce("n_after_exact", F.lit(0)).alias("n_after_exact"),
-        F.coalesce("n_after_boilerplate", F.lit(0)).alias(
-            "n_after_boilerplate"
-        ),
-        F.coalesce("n_after_quality", F.lit(0)).alias("n_after_quality"),
-        F.coalesce("n_after_containment", F.lit(0)).alias(
-            "n_after_containment"
-        ),
-        F.coalesce("n_after_semantic", F.lit(0)).alias("n_after_semantic"),
-    ]
-    if with_decontam:
-        cols.append(
-            F.coalesce("n_after_decontam", F.lit(0)).alias(
-                "n_after_decontam"
-            )
-        )
-    cols += [
-        F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
-        F.coalesce("kept_tokens", F.lit(0)).alias("kept_tokens"),
-        "mean_dsir_kept",
-        "q_temp",
-        "boost",
-    ]
-    if with_url_stage:
-        cols += ["epochs_at_4x", "over_repeat"]
-    if with_bpe_tail:
-        cols += [
-            F.coalesce("bpe_symbols_kept", F.lit(0)).alias(
-                "bpe_symbols_kept"
-            ),
-            "bpe_symbols_per_token",
-        ]
-    return out.select(*cols)
-
-
-def _v67_sql(
-    with_decontam: bool,
-    with_url_stage: bool = False,
-    with_bpe_tail: bool = False,
-) -> str:
-    """Composed v6/v7/v8/v9 oracle: v5's CTE chain extended by
-    dedup_paragraph and text_dsir_weight EMBEDDED AS FULL SUBQUERIES
-    of their published SQL (compose-don't-copy: an edit to either
-    op's oracle propagates here), then the temperature-mixture CTEs
-    over the final kept token mass. with_decontam=True (v7) splices
-    sim_semantic_decontam's published SQL in as the kept_dec
-    anti-join plus its funnel column; with_url_stage=True (v8)
-    prepends _url_ranked_ctes_sql()'s URL-grain keep-best block as
-    stage 0 (the domain-flagging rfp then reads the post-URL corpus)
-    and appends the epoch-budget tail columns; with_bpe_tail=True
-    (v9) splices text.py's BPE head/round CTE templates with the
-    induction head re-pointed at the kept CTE, and appends the
-    subword-symbol accounting columns."""
-    from .similarity import (
-        _COS_SQL,
-        _EMB_SQL,
-        _IVF_GRAPH_RANKED_SQL,
-        _SEM_DECONTAM_SQL,
-        _SEMDEDUP_TAU,
-    )
-    from .text import _DSIR_SQL
-
-    if with_url_stage:
-        url_ctes = """
-{ranked_ctes},
-udrops AS (SELECT doc_id FROM uranked WHERE rn > 1),
-durl AS (SELECT raw.* FROM raw ANTI JOIN udrops USING (doc_id)),""".format(
-            ranked_ctes=_url_ranked_ctes_sql().strip()
-        )
-        url_n_cte = """
-url_n AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_after_url
-          FROM durl GROUP BY 1),"""
-        url_col = (
-            "\n       COALESCE(url_n.n_after_url, 0)          AS n_after_url,"
-        )
-        url_join = "\nLEFT JOIN url_n  USING (source)"
-        base = "durl"
-        epoch_cols = (
-            ",\n         ROUND(4.0 * sh.w / zz.z / sh.p + 1e-9, 4)"
-            " AS epochs_at_4x,"
-            "\n         ROUND(4.0 * sh.w / zz.z / sh.p + 1e-9, 4) > 4.0"
-            " AS over_repeat"
-        )
-        epoch_out = ",\n       mix.epochs_at_4x,\n       mix.over_repeat"
-    else:
-        url_ctes = url_n_cte = url_col = url_join = ""
-        base = "raw"
-        epoch_cols = epoch_out = ""
-
-    if with_decontam:
-        dec_ctes = """
-decd AS (SELECT doc_id FROM ({dec_sql})),
-kept_dec AS (SELECT kept_sem.* FROM kept_sem ANTI JOIN decd USING (doc_id)),""".format(
-            dec_sql=_SEM_DECONTAM_SQL.strip()
-        )
-        dec_n_cte = """
-dec_n AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_after_decontam
-          FROM kept_dec GROUP BY 1),"""
-        dec_col = (
-            "\n       COALESCE(dec_n.n_after_decontam, 0)"
-            "    AS n_after_decontam,"
-        )
-        dec_join = "\nLEFT JOIN dec_n  USING (source)"
-    else:
-        dec_ctes = "\nkept_dec AS (SELECT * FROM kept_sem),"
-        dec_n_cte = dec_col = dec_join = ""
-
-    if with_bpe_tail:
-        from .text import _BPE_VOCAB_ROUNDS, _bpe_head_sql, _bpe_round_block
-
-        bpe_ctes = (
-            "\n"
-            + _bpe_head_sql(src="kept", with_prefix="")
-            + "".join(
-                _bpe_round_block(r) for r in range(1, _BPE_VOCAB_ROUNDS + 1)
-            )
-            + """,
-bsyms AS (
-  SELECT word, CAST(len(string_split(substring(w, 2, length(w) - 2),
-                                     '||')) AS BIGINT) AS n_syms
-  FROM st{k}),
-bpw AS (
-  SELECT source, word, CAST(COUNT(*) AS BIGINT) AS c
-  FROM (SELECT source, unnest({toks}) AS word FROM kept)
-  WHERE word <> '' GROUP BY 1, 2),
-bpe_n AS (
-  SELECT source, CAST(SUM(c * n_syms) AS BIGINT) AS bpe_symbols_kept,
-         ROUND(CAST(SUM(c * n_syms) AS DOUBLE) / SUM(c) + 1e-9, 6)
-           AS bpe_symbols_per_token
-  FROM bpw JOIN bsyms USING (word) GROUP BY 1),""".format(
-                k=_BPE_VOCAB_ROUNDS, toks=_TOKENS_SQL
-            )
-        )
-        bpe_out = (
-            ",\n       COALESCE(bpe_n.bpe_symbols_kept, 0)"
-            " AS bpe_symbols_kept,\n       bpe_n.bpe_symbols_per_token"
-        )
-        bpe_join = "\nLEFT JOIN bpe_n  USING (source)"
-    else:
-        bpe_ctes = bpe_out = bpe_join = ""
-
-    return """
-WITH raw AS (SELECT doc_id, source, text FROM documents),{url_ctes}
-rfp AS (
-  SELECT source,
-         md5(list_aggregate(list_sort(list_distinct({toks})),
-                            'string_agg', ' ')) AS f
-  FROM {base}),
-flagged AS (
-  SELECT source FROM rfp GROUP BY 1
-  HAVING ROUND(1.0 - COUNT(DISTINCT f) / CAST(COUNT(*) AS DOUBLE) + 1e-9, 4)
-         > 0.055),
-d0 AS (SELECT {base}.* FROM {base} ANTI JOIN flagged USING (source)),
-keep1 AS (SELECT MIN(doc_id) AS doc_id FROM d0 GROUP BY md5(text)),
-d1 AS (SELECT d0.* FROM d0 SEMI JOIN keep1 USING (doc_id)),
-bad_para AS (
-  SELECT doc_id FROM ({para_sql}) WHERE keep_doc = 0),
-d1b AS (SELECT d1.* FROM d1 ANTI JOIN bad_para USING (doc_id)),
-tok AS (SELECT doc_id, unnest({toks}) AS tok FROM d1b),
-cnt AS (SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS c
-        FROM tok GROUP BY 1, 2),
-ent AS (
-  SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_tokens,
-         ROUND(log2(CAST(SUM(c) AS BIGINT))
-               - SUM(CAST(c AS DOUBLE) * log2(c)) / CAST(SUM(c) AS BIGINT)
-               + 1e-9, 6) AS entropy
-  FROM cnt GROUP BY 1),
-d2 AS (
-  SELECT d1b.doc_id, d1b.source, d1b.text, ent.n_tokens, ent.entropy
-  FROM d1b JOIN ent USING (doc_id)
-  WHERE ent.entropy >= 4.0 AND ent.n_tokens >= 20),
-t2 AS (SELECT doc_id, source, list_distinct({toks}) AS toks FROM d2),
-p AS (
-  SELECT a.doc_id AS da, b.doc_id AS db,
-         len(list_intersect(a.toks, b.toks)) AS inter,
-         len(a.toks) AS sza, len(b.toks) AS szb
-  FROM t2 a JOIN t2 b ON a.source = b.source AND a.doc_id <> b.doc_id),
-cdrops AS (
-  SELECT DISTINCT da AS doc_id FROM p
-  WHERE ROUND(CAST(inter AS DOUBLE) / sza + 1e-9, 4) >= 0.8
-    AND (szb > sza OR (szb = sza AND db < da))),
-kept_c AS (SELECT d2.* FROM d2 ANTI JOIN cdrops USING (doc_id)),
-e AS ({emb}),
-{ranked},
-assign AS (SELECT vec_id, cid AS cell FROM ranked WHERE rk = 1),
-m AS (SELECT a.vec_id, a.cell, e.v FROM assign a JOIN e USING (vec_id)),
-spairs AS (
-  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, {cos} AS cosine
-  FROM m a JOIN m b ON a.cell = b.cell AND a.vec_id < b.vec_id),
-sdrops AS (
-  SELECT DISTINCT vec_b AS doc_id FROM spairs WHERE cosine >= {tau}),
-kept_sem AS (SELECT kept_c.* FROM kept_c ANTI JOIN sdrops USING (doc_id)),{dec_ctes}
-dsirw AS (
-  SELECT doc_id, log_weight FROM ({dsir_sql})),
-scored AS (
-  SELECT kept_dec.*, dsirw.log_weight,
-         ROW_NUMBER() OVER (ORDER BY dsirw.log_weight DESC,
-                            kept_dec.doc_id ASC) AS _r,
-         COUNT(*) OVER () AS _n
-  FROM kept_dec JOIN dsirw USING (doc_id)),
-kept AS MATERIALIZED (
-  SELECT doc_id, source, text, n_tokens, entropy, log_weight
-  FROM scored WHERE _r <= (_n + 1) // 2),{bpe_ctes}
-raw_n AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_raw
-          FROM raw GROUP BY 1),{url_n_cte}
-d0_n AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_after_domain
-         FROM d0 GROUP BY 1),
-d1_n AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_after_exact
-         FROM d1 GROUP BY 1),
-d2_n AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_after_quality
-         FROM d2 GROUP BY 1),
-cont_n AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_after_containment
-           FROM kept_c GROUP BY 1),
-sem_n AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_after_semantic
-          FROM kept_sem GROUP BY 1),{dec_n_cte}
-b_n AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_after_boilerplate
-        FROM d1b GROUP BY 1),
-kept_n AS (
-  SELECT source, CAST(COUNT(*) AS BIGINT) AS n_kept,
-         CAST(SUM(n_tokens) AS BIGINT) AS kept_tokens,
-         ROUND(AVG(log_weight) + 1e-9, 4) AS mean_dsir_kept
-  FROM kept GROUP BY 1),
-tt AS (SELECT SUM(kept_tokens) AS tot FROM kept_n),
-sh AS (
-  SELECT kept_n.source,
-         CAST(kept_tokens AS DOUBLE) / tt.tot AS p,
-         pow(CAST(kept_tokens AS DOUBLE) / tt.tot, 0.3) AS w
-  FROM kept_n CROSS JOIN tt),
-zz AS (SELECT SUM(w) AS z FROM sh),
-mix AS (
-  SELECT sh.source,
-         ROUND(sh.w / zz.z + 1e-9, 6) AS q_temp,
-         ROUND(sh.w / zz.z / sh.p + 1e-9, 4) AS boost{epoch_cols}
-  FROM sh CROSS JOIN zz)
-SELECT raw_n.source, raw_n.n_raw,{url_col}
-       COALESCE(d0_n.n_after_domain, 0)        AS n_after_domain,
-       COALESCE(d1_n.n_after_exact, 0)         AS n_after_exact,
-       COALESCE(b_n.n_after_boilerplate, 0)    AS n_after_boilerplate,
-       COALESCE(d2_n.n_after_quality, 0)       AS n_after_quality,
-       COALESCE(cont_n.n_after_containment, 0) AS n_after_containment,
-       COALESCE(sem_n.n_after_semantic, 0)     AS n_after_semantic,{dec_col}
-       COALESCE(kept_n.n_kept, 0)              AS n_kept,
-       COALESCE(kept_n.kept_tokens, 0)         AS kept_tokens,
-       kept_n.mean_dsir_kept,
-       mix.q_temp,
-       mix.boost{epoch_out}{bpe_out}
-FROM raw_n
-LEFT JOIN d0_n   USING (source)
-LEFT JOIN d1_n   USING (source)
-LEFT JOIN d2_n   USING (source)
-LEFT JOIN cont_n USING (source)
-LEFT JOIN sem_n  USING (source)
-LEFT JOIN b_n    USING (source)
-LEFT JOIN kept_n USING (source)
-LEFT JOIN mix    USING (source){dec_join}{url_join}{bpe_join}
-""".format(
-        toks=_TOKENS_SQL,
-        emb=_EMB_SQL,
-        ranked=_IVF_GRAPH_RANKED_SQL,
-        cos=_COS_SQL.format(a="a", b="b"),
-        tau=_SEMDEDUP_TAU,
-        para_sql=_PARAGRAPH_SQL.strip(),
-        dsir_sql=_DSIR_SQL.strip(),
-        dec_ctes=dec_ctes,
-        dec_n_cte=dec_n_cte,
-        dec_col=dec_col,
-        dec_join=dec_join,
-        url_ctes=url_ctes,
-        url_n_cte=url_n_cte,
-        url_col=url_col,
-        url_join=url_join,
-        base=base,
-        epoch_cols=epoch_cols,
-        epoch_out=epoch_out,
-        bpe_ctes=bpe_ctes,
-        bpe_out=bpe_out,
-        bpe_join=bpe_join,
-    )
 
 
 def llm_data_pipeline_v3(spark: SparkSession, sf: str) -> DataFrame:
@@ -5241,10 +4867,10 @@ QUERIES: dict[str, QuerySpec] = {
     "llm_data_pipeline_v9": QuerySpec(
         "llm_data_pipeline_v9",
         llm_data_pipeline_v9,
-        _v67_sql(True, True, True),
+        _funnel_sql("v9"),
     ),
     "llm_data_pipeline_v8": QuerySpec(
-        "llm_data_pipeline_v8", llm_data_pipeline_v8, _v67_sql(True, True)
+        "llm_data_pipeline_v8", llm_data_pipeline_v8, _funnel_sql("v8")
     ),
     "text_host_reputation": QuerySpec(
         "text_host_reputation", text_host_reputation, _host_reputation_sql()
@@ -5295,18 +4921,18 @@ QUERIES: dict[str, QuerySpec] = {
     ),
     # r12 flagship: v4 bracketed by domain pre-filter + semantic dedup
     "llm_data_pipeline_v5": QuerySpec(
-        "llm_data_pipeline_v5", llm_data_pipeline_v5, _v5_sql()
+        "llm_data_pipeline_v5", llm_data_pipeline_v5, _funnel_sql("v5")
     ),
     # r12 second-wave flagship: v5 + boilerplate drop + DSIR + mix
     "llm_data_pipeline_v6": QuerySpec(
-        "llm_data_pipeline_v6", llm_data_pipeline_v6, _v67_sql(False)
+        "llm_data_pipeline_v6", llm_data_pipeline_v6, _funnel_sql("v6")
     ),
     # r13 flagship: v6 + semantic decontamination (VERDICT r12 item 4)
     "llm_data_pipeline_v7": QuerySpec(
-        "llm_data_pipeline_v7", llm_data_pipeline_v7, _v67_sql(True)
+        "llm_data_pipeline_v7", llm_data_pipeline_v7, _funnel_sql("v7")
     ),
     # r10 flagship: the curation funnel composed from this round's ops
     "llm_data_pipeline_v4": QuerySpec(
-        "llm_data_pipeline_v4", llm_data_pipeline_v4, _V4_SQL
+        "llm_data_pipeline_v4", llm_data_pipeline_v4, _funnel_sql("v4")
     ),
 }

@@ -401,16 +401,20 @@ def features_with_gt(spark: SparkSession) -> DataFrame:
     # An explicit numPartitions is exempt from AQE coalescing; at real
     # scale the join output is too large to coalesce anyway.
     full = full.repartition(spark.sparkContext.defaultParallelism)
-    out = assemble_features(full).persist(StorageLevel.MEMORY_AND_DISK)
     evicted = _FEATURES_MEMO[0]
     if evicted is not None and evicted[0]() is not None:
         # deterministic release of the replaced frame's blocks (the
         # block manager is shared across sessions of one context;
-        # waiting for GC + ContextCleaner lets copies accumulate)
+        # waiting for GC + ContextCleaner lets copies accumulate).
+        # BEFORE the new persist: both frames have the same plan, and
+        # sessions of one context share a CacheManager, so persisting
+        # first would find the old entry and unpersisting after would
+        # drop the only entry, leaving the new frame uncached.
         try:
             evicted[1].unpersist()
         except Exception:
             pass  # session mid-shutdown; blocks die with it anyway
+    out = assemble_features(full).persist(StorageLevel.MEMORY_AND_DISK)
     _FEATURES_MEMO[0] = (weakref.ref(spark), out)
     return out
 

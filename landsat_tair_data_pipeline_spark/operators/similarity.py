@@ -1055,9 +1055,11 @@ def _pq_codebook_block(emb: DataFrame):
 def _pq_sub_dists(X, C, s):
     """Rounded squared distances of the rows of X to every codebook
     row, within subspace ``s`` — the shared kernel formula: direct
-    (x−c)² sum over the subspace dims, +1e-9 nudge, half-away-from-
-    zero 6dp (distances are non-negative, so floor(x·1e6+0.5) IS the
-    F.round mirror — the house numpy recipe)."""
+    (x−c)² sum over the subspace dims, +1e-9 nudge, 6dp via
+    floor(x·1e6+0.5) (the house numpy recipe). Distances are
+    non-negative, so that floor is half-away-from-zero like F.round;
+    what keeps a value off an exact decimal tie, where the two
+    engines could still round apart, is the +1e-9 nudge."""
     import numpy as np
 
     sl = slice(s * _PQ_SUBDIM, (s + 1) * _PQ_SUBDIM)
@@ -1240,7 +1242,11 @@ def sim_pq_recall(spark: SparkSession, sf: str) -> DataFrame:
         "n_queries",
         F.col("_n_exact").alias("n_exact_pairs"),
         F.col("_n_hits").cast("bigint").alias("n_hits"),
-        F.round(F.col("_n_hits") / F.col("_n_exact") + 1e-9, 4).alias("recall"),
+        # NULL, not an ANSI divide error, with no probe queries (the
+        # oracle's 0/0)
+        F.round(
+            F.try_divide(F.col("_n_hits"), F.col("_n_exact")) + 1e-9, 4
+        ).alias("recall"),
     )
 
 
@@ -1256,7 +1262,9 @@ def _pq_partial_topk_pdf(dmat, vids, qids, k, col="dist"):
     import numpy as np
     import pandas as pd
 
-    qs, vs, ds = [], [], []
+    # seeded with empty arrays so a probe-less batch (no vec_id <
+    # _ADC_NQ) yields an empty frame of the declared schema
+    qs, vs, ds = [np.empty(0, np.int64)], [np.empty(0, np.int64)], [np.empty(0)]
     for j in range(dmat.shape[1]):
         idx = np.nonzero(vids != qids[j])[0]
         order = np.lexsort((vids[idx], dmat[idx, j]))[:k]
@@ -1311,7 +1319,9 @@ def _pq_search_ranked(
     )
     probes.sort(key=lambda r: int(r["vec_id"]))
     qids = np.array([int(r["vec_id"]) for r in probes], dtype=np.int64)
-    Q = np.vstack([np.asarray(r["v"], dtype=np.float64) for r in probes])
+    Q = np.array(
+        [np.asarray(r["v"], dtype=np.float64) for r in probes]
+    ).reshape(len(probes), C.shape[1])
 
     def exact_partials(batches, Q=Q, qids=qids):
         import numpy as np
